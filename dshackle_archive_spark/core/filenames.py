@@ -41,15 +41,6 @@ class DataKind(str, Enum):
     def range_ext(self) -> str:
         return {"blocks": "blocks", "transactions": "txes", "traces": "traces"}[self.value]
 
-    @classmethod
-    def from_ext(cls, ext: str) -> "DataKind":
-        return {
-            "block": cls.BLOCKS,
-            "blocks": cls.BLOCKS,
-            "txes": cls.TRANSACTIONS,
-            "traces": cls.TRACES,
-        }[ext]
-
 
 @dataclass(frozen=True)
 class FileInfo:
@@ -109,15 +100,27 @@ def range_file_path(rng: Range, kind: DataKind, fmt: str = "avro") -> str:
     )
 
 
-def parse_filename(path: str) -> Optional[FileInfo]:
-    """Parse ``(kind, range, hash?)`` from an archive path; None if foreign."""
+_EXT_KIND = {"block": "blocks", "blocks": "blocks", "txes": "transactions", "traces": "traces"}
+
+
+def parse_name(path: str) -> Optional[tuple[str, int, int, Optional[str]]]:
+    """``(kind, start, end, hash)`` of an archive path as plain values (the
+    inventory's row shape); None if foreign."""
     name = path.rsplit("/", 1)[-1]
     m = SINGLE_RE.fullmatch(name)
     if m:
         h = int(m.group("height"))
-        return FileInfo(path, DataKind.from_ext(m.group("ext")), Range(h, h), m.group("hash"))
+        return _EXT_KIND[m.group("ext")], h, h, m.group("hash")
     m = RANGE_RE.fullmatch(name)
     if m:
-        rng = Range(int(m.group("start")), int(m.group("end")))
-        return FileInfo(path, DataKind.from_ext(m.group("ext")), rng, None)
+        return _EXT_KIND[m.group("ext")], int(m.group("start")), int(m.group("end")), None
     return None
+
+
+def parse_filename(path: str) -> Optional[FileInfo]:
+    """Parse ``(kind, range, hash?)`` from an archive path; None if foreign."""
+    parsed = parse_name(path)
+    if parsed is None:
+        return None
+    kind, start, end, block_hash = parsed
+    return FileInfo(path, DataKind(kind), Range(start, end), block_hash)

@@ -129,11 +129,24 @@ def merge_ranges(ranges: Iterable[Range]) -> list[Range]:
 
 
 def subtract_ranges(base: Iterable[Range], cuts: Iterable[Range]) -> list[Range]:
-    """``base - cuts`` as maximal disjoint ranges (gap detection's core)."""
-    remaining = merge_ranges(base)
-    for cut in merge_ranges(cuts):
-        next_remaining: list[Range] = []
-        for r in remaining:
-            next_remaining.extend(r.cut(cut))
-        remaining = next_remaining
-    return remaining
+    """``base - cuts`` as maximal disjoint ranges (gap detection's core).
+
+    One sort-and-sweep pass over both merged lists: O((b + c) log(b + c)).
+    A cut reaching past the end of one base range stays current for the
+    next one."""
+    cuts = merge_ranges(cuts)
+    out: list[Range] = []
+    i = 0
+    for r in merge_ranges(base):
+        pos = r.start
+        while i < len(cuts) and cuts[i].end < pos:
+            i += 1
+        j = i
+        while j < len(cuts) and cuts[j].start <= r.end:
+            if cuts[j].start > pos:
+                out.append(Range(pos, cuts[j].start - 1))
+            pos = max(pos, cuts[j].end + 1)
+            j += 1
+        if pos <= r.end:
+            out.append(Range(pos, r.end))
+    return out

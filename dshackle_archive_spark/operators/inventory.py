@@ -1,23 +1,17 @@
-"""Inventory-level operators: group assembly, completeness, gap detection.
+"""J3 group assembly over a file-inventory DataFrame.
 
-The semantic heart shared by fix/stream/compact in the reference:
-``find_incomplete_tables`` (``/root/reference/src/storage/mod.rs:143-207``),
-group assembly (``src/archiver/range_group.rs:44-185``), duplicate/overlap
-handling (``src/command/verify.rs:373-457``).
-
-All inputs here are file inventories — one row per archive file — i.e.
-metadata-scale relative to the data (1 row per ≤1000-block file). The plans
-still avoid driver round-trips: everything is DataFrame-native so the same
-code runs when the inventory itself is billions of rows (100 TB archive ⇒
-~10^8 files ⇒ still comfortably distributed).
+The fix, compact and verify workflows plan on the driver over the parsed
+listing (``core.inventory_plan``): the inventory is one row per ≤1000-block
+file, and a Spark job per metadata step costs more than the loop.
+``group_ranges`` is the DataFrame form of the J3 pivot, for callers that
+hold the inventory as a DataFrame (``sources.archive.inventory_df`` /
+``inventory_df_hadoop``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from .intervals import complement_ranges, merge_range_rows
 
 ALL_KINDS = ("blocks", "transactions", "traces")
 
@@ -41,129 +35,3 @@ def group_ranges(inv: DataFrame, kinds: tuple[str, ...] = ALL_KINDS) -> DataFram
         )
         pivoted = pivoted.withColumn(f"n_{k}", F.coalesce(F.col(f"n_{k}"), F.lit(0)))
     return pivoted
-
-
-def duplicate_groups(groups: DataFrame, kinds: tuple[str, ...] = ALL_KINDS) -> DataFrame:
-    """Ranges with >1 file of the same kind — both copies get deleted."""
-    cond = None
-    for k in kinds:
-        c = F.col(f"n_{k}") > 1
-        cond = c if cond is None else (cond | c)
-    return groups.filter(cond)
-
-
-def incomplete_groups(
-    groups: DataFrame, kinds: tuple[str, ...] = ALL_KINDS
-) -> DataFrame:
-    """A4: groups missing at least one expected kind, with per-kind flags."""
-    out = groups
-    for k in kinds:
-        out = out.withColumn(f"missing_{k}", F.col(f"n_{k}") == 0)
-    cond = None
-    for k in kinds:
-        c = F.col(f"missing_{k}")
-        cond = c if cond is None else (cond | c)
-    return out.filter(cond)
-
-
-def find_incomplete_tables(
-    inv: DataFrame,
-    lo: int,
-    hi: int,
-    kinds: tuple[str, ...] = ALL_KINDS,
-) -> DataFrame:
-    """A3+A4: per kind, the [start,end] ranges missing within [lo, hi].
-
-    Reference: ``find_incomplete_tables`` / ``find_missing_ranges``
-    (``storage/mod.rs:143-207``) — start from the full requested range and
-    subtract every listed file's range, per table kind. Output:
-    ``kind, start, end`` rows (the fix plan's work list).
-
-    Closed-form (no height explode): per-kind coverage islands → complement.
-    Kinds with zero files anywhere in scope are produced via the expected-kind
-    domain cross-join, not lost.
-    """
-    spark = inv.sparkSession
-    kinds_df = spark.createDataFrame([(k,) for k in kinds], "kind string")
-    covered = inv.join(F.broadcast(kinds_df), "kind", "inner").select("kind", "start", "end")
-    covered_islands = merge_range_rows(covered, keys=["kind"])
-    # ensure every expected kind appears in the domain even with no coverage:
-    # complement_ranges derives its key domain from the islands input, so
-    # union a sentinel empty-coverage row far outside [lo, hi] per kind.
-    sentinel = kinds_df.select(
-        "kind",
-        F.lit(-2).cast("long").alias("start"),
-        F.lit(-2).cast("long").alias("end"),
-    )
-    domain_islands = covered_islands.unionByName(sentinel)
-    return complement_ranges(domain_islands, lo, hi, keys=["kind"]).select(
-        "kind", "start", "end"
-    )
-
-
-def dedup_largest_covering(groups: DataFrame) -> DataFrame:
-    """W3: among groups whose ranges overlap, keep the one covering the most
-    blocks; the rest become a delete list.
-
-    Reference ``verify.rs:373-404``. Overlap islands are computed over the
-    group ranges (A1), then a ranking window per island keeps the widest
-    (ties broken by start for determinism).
-
-    Returns the input with ``keep`` boolean added.
-
-    Island MEMBERSHIP is labeled inside the gaps-and-islands window itself
-    (running max of previous ends; a row opens a new island iff its start
-    clears it — adjacency excluded, so touching ranges are neighbors, not
-    rivals). The earlier shape computed island BOUNDARIES first and joined
-    members back by containment — a broadcast nested-loop join that went
-    quadratic in island count (the 10⁶-file stress probe measured 109 s for
-    385k groups; this labeling runs the same input in ~2 s). The global
-    ordering window matches the rest of the interval kernel's
-    metadata-scale contract; at 10⁸ inventory rows it takes the same
-    bucketed two-stage split as ``islands()``.
-    """
-    w = Window.orderBy("start", "end")
-    prev_max_end = F.max("end").over(w.rowsBetween(Window.unboundedPreceding, -1))
-    labeled = groups.withColumn(
-        "_new",
-        F.when(prev_max_end.isNull() | (F.col("start") > prev_max_end), 1).otherwise(0),
-    ).withColumn(
-        "_isl", F.sum("_new").over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
-    wr = Window.partitionBy("_isl").orderBy(
-        F.desc(F.col("end") - F.col("start")), F.asc("start"), F.asc("hash")
-    )
-    return (
-        labeled.withColumn("_rk", F.row_number().over(wr))
-        .withColumn("keep", F.col("_rk") == 1)
-        .drop("_rk", "_isl", "_new")
-    )
-
-
-def merge_small_ranges(groups: DataFrame, threshold: int = 10) -> DataFrame:
-    """W4: coalesce complete groups of ≤ threshold blocks into work islands.
-
-    Reference ``verify.rs:237-267``: small adjacent ranges are verified as
-    one unit. Output: ``island_start, island_end, members`` (collected list
-    of [start,end] structs) for small groups; large groups pass through as
-    their own island.
-    """
-    small = groups.filter((F.col("end") - F.col("start") + 1) <= threshold)
-    large = groups.filter((F.col("end") - F.col("start") + 1) > threshold)
-    isl = merge_range_rows(small.select("start", "end")).select(
-        F.col("start").alias("island_start"), F.col("end").alias("island_end")
-    )
-    small_j = small.join(
-        F.broadcast(isl),
-        (F.col("start") >= F.col("island_start")) & (F.col("end") <= F.col("island_end")),
-        "left",
-    )
-    merged = small_j.groupBy("island_start", "island_end").agg(
-        F.sort_array(F.collect_list(F.struct("start", "end"))).alias("members")
-    )
-    solo = large.select(
-        F.col("start").alias("island_start"),
-        F.col("end").alias("island_end"),
-        F.array(F.struct("start", "end")).alias("members"),
-    )
-    return merged.unionByName(solo)

@@ -9,14 +9,16 @@ launches; a 1M-block scope is 1,000 chunks).
 
 1. aligned chunks only (C2 — compaction never builds partial range files,
    ``compact.rs:48``)
-2. ONE grouped gate pass (``verify_files``, ``compact.rs:221-243``) computes
-   every chunk's verdict at once: requested kinds complete, group ranges
-   exactly covering the chunk, no boundary-crossing files, no duplicates,
-   not already compacted (an exact-range file for every REQUESTED kind —
-   foreign kinds don't count)
-3. rewrite: per kind, ONE job reads every passing chunk's source files and
-   writes one range file per chunk (the chunk key is the shuffle key, so
-   1,000 chunks land as 1,000 parallel tasks)
+2. the gate (``verify_files``, ``compact.rs:221-243``) runs on the driver,
+   over the parsed archive listing (``core.inventory_plan.plan_compact``):
+   requested kinds complete, group ranges exactly covering the chunk, no
+   boundary-crossing files, no duplicates, not already compacted (an
+   exact-range file for every REQUESTED kind — foreign kinds don't count).
+   It also yields each passing chunk's source files, so planning launches
+   no Spark job and a dry run launches none at all
+3. rewrite: ONE action reads every passing chunk's source files of every
+   kind and writes one range file per (chunk, kind) (the chunk key is the
+   shuffle key, so 1,000 chunks land as 1,000 parallel tasks)
 4. reconciliation (J6/A7) for ALL chunks in one grouped job: copied heights
    must form exactly one island equal to the chunk; txids promised by copied
    blocks == txids copied. Failing chunks roll back their outputs.
@@ -32,10 +34,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..core.filenames import DataKind
+from ..core.inventory_plan import plan_compact
 from ..core.ranges import Range
-from ..operators.intervals import merge_range_rows
 from ..sources import ref_layout
-from ..sources.archive import delete_files, inventory_df
+from ..sources.archive import delete_files, list_inventory
 
 
 @dataclass
@@ -48,94 +50,6 @@ class CompactResult:
     # disk until vacuum — reported here, never under ``deleted``
     pruned_from_snapshot: list[str] = field(default_factory=list)
     snapshot_version: int | None = None
-
-
-def _gate(
-    spark: SparkSession,
-    inv: DataFrame,
-    chunks: list[Range],
-    kinds: tuple[str, ...],
-    chunk: int,
-) -> list[dict]:
-    """All chunks' gate verdicts in one grouped pass (≈2 metadata-scale jobs).
-
-    Returns one dict per chunk: ``c_start, c_end, has_overhang, n_exact,
-    uncovered (list of kinds), has_dup`` — the caller turns these into
-    skip/pass decisions driver-side without further jobs.
-    """
-    chunks_df = spark.createDataFrame(
-        [(c.start, c.end) for c in chunks], "c_start long, c_end long"
-    )
-    kinds_df = spark.createDataFrame([(k,) for k in kinds], "kind string")
-    # files of the REQUESTED kinds intersecting any chunk (broadcast the tiny
-    # chunk domain — J7-style range assignment, never a cartesian over data)
-    fk = (
-        inv.filter(F.col("kind").isin(list(kinds)))
-        .join(
-            F.broadcast(chunks_df),
-            (F.col("end") >= F.col("c_start")) & (F.col("start") <= F.col("c_end")),
-            "inner",
-        )
-        .withColumn(
-            "contained",
-            (F.col("start") >= F.col("c_start")) & (F.col("end") <= F.col("c_end")),
-        )
-        .withColumn(
-            "exact",
-            (F.col("start") == F.col("c_start")) & (F.col("end") == F.col("c_end")),
-        )
-    )
-    contained = fk.filter("contained")
-    # per (chunk, kind): do the contained ranges merge into exactly the chunk?
-    cover = (
-        merge_range_rows(
-            contained.select("c_start", "c_end", "kind", "start", "end"),
-            keys=["c_start", "c_end", "kind"],
-        )
-        .groupBy("c_start", "c_end", "kind")
-        .agg(
-            F.count("*").alias("n_islands"),
-            F.min("start").alias("cov_start"),
-            F.max("end").alias("cov_end"),
-        )
-    )
-    dups = (
-        contained.groupBy("c_start", "kind", "start", "end", "hash")
-        .agg(F.count("*").alias("n"))
-        .filter("n > 1")
-        .groupBy("c_start")
-        .agg(F.count("*").alias("n_dup_groups"))
-    )
-    exacts = (
-        fk.filter("exact")
-        .groupBy("c_start")
-        .agg(F.countDistinct("kind").alias("n_exact"))
-    )
-    overhang = (
-        fk.filter(~F.col("contained"))
-        .groupBy("c_start")
-        .agg(F.count("*").alias("n_overhang"))
-    )
-    dom = chunks_df.crossJoin(F.broadcast(kinds_df))
-    kind_stat = dom.join(cover, ["c_start", "c_end", "kind"], "left").withColumn(
-        "covered",
-        (F.col("n_islands") == 1)
-        & (F.col("cov_start") == F.col("c_start"))
-        & (F.col("cov_end") == F.col("c_end")),
-    )
-    chunk_stat = (
-        kind_stat.groupBy("c_start", "c_end")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.when(~F.coalesce(F.col("covered"), F.lit(False)), F.col("kind")))
-            ).alias("uncovered")
-        )
-        .join(exacts, "c_start", "left")
-        .join(overhang, "c_start", "left")
-        .join(dups, "c_start", "left")
-        .fillna(0, ["n_exact", "n_overhang", "n_dup_groups"])
-    )
-    return [r.asDict() for r in chunk_stat.orderBy("c_start").collect()]
 
 
 def compact(
@@ -158,68 +72,19 @@ def compact(
     kinds = tuple(k.value for k in tables)
     result = CompactResult()
 
-    chunks = rng.split_chunks(chunk, aligned=True)
-    if not chunks:
-        return result
-
-    inv_all = inventory_df(spark, root, blockchain).cache()
-    verdicts = _gate(spark, inv_all, chunks, kinds, chunk)
-
-    passing: list[tuple[int, int]] = []
-    for v in verdicts:
-        key = (v["c_start"], v["c_end"])
-        if v["n_exact"] == len(kinds):
-            # C2/task gate: one exact-range file per REQUESTED kind — a
-            # foreign kind's range file must not mask uncompacted singles
-            result.skipped_chunks.append((*key, "already compacted"))
-        elif v["n_overhang"] > 0:
-            result.skipped_chunks.append((*key, "file range crosses chunk boundary"))
-        elif v["uncovered"]:
-            result.skipped_chunks.append(
-                (*key, f"{v['uncovered'][0]} does not exactly cover the chunk")
-            )
-        elif v["n_dup_groups"] > 0:
-            result.skipped_chunks.append((*key, "duplicate files in chunk"))
-        else:
-            passing.append(key)
-
+    plan = plan_compact(list_inventory(root, blockchain), rng, chunk, kinds)
+    result.skipped_chunks.extend(plan.skipped)
+    passing = plan.passing
     if not passing or dry_run:
-        inv_all.unpersist()
         return result
 
     passing_ids = sorted(s // chunk for s, _ in passing)
-    ids_df = spark.createDataFrame([(i,) for i in passing_ids], "cid long")
+    exact_kinds, sources = plan.exact_kinds, plan.sources
 
-    # which (chunk, kind) already sits in its exact target file (kept as-is,
-    # never rewritten-and-deleted in place) + the source-file work list —
-    # one metadata-scale collect
-    chunks_df = spark.createDataFrame(list(passing), "c_start long, c_end long")
-    files = (
-        inv_all.filter(F.col("kind").isin(list(kinds)))
-        .join(
-            F.broadcast(chunks_df),
-            (F.col("start") >= F.col("c_start")) & (F.col("end") <= F.col("c_end")),
-            "inner",
-        )
-        .withColumn(
-            "exact",
-            (F.col("start") == F.col("c_start")) & (F.col("end") == F.col("c_end")),
-        )
-        .select("c_start", "kind", "path", "exact")
-        .collect()
-    )
-    inv_all.unpersist()
-    exact_kinds: dict[int, set] = {}
-    sources: dict[tuple[int, str], list[str]] = {}
-    for r in files:
-        if r["exact"]:
-            exact_kinds.setdefault(r["c_start"], set()).add(r["kind"])
-        else:
-            sources.setdefault((r["c_start"], r["kind"]), []).append(r["path"])
-
-    # phase B: ONE read+write job per kind across every passing chunk
+    # phase B: ONE read+write action across every kind and passing chunk
     copied: dict[str, DataFrame] = {}
     rewritten_ids: dict[str, list[int]] = {}
+    writes: DataFrame | None = None
     for kind in kinds:
         todo = [
             s // chunk
@@ -228,19 +93,10 @@ def compact(
         ]
         if not todo:
             continue
-        paths = [
-            os.path.join(base, p)
-            for (c, k), ps in sources.items()
-            if k == kind and c // chunk in set(todo)
-            for p in ps
-        ]
+        paths = [os.path.join(base, p) for c in todo for p in sources.get((c * chunk, kind), [])]
         df = read_archive_data(spark, paths, kind).drop("_path")
-        # P1: trim file overlap to the passing chunks (semi-join on chunk id)
-        df = (
-            df.withColumn("_cid", F.floor(F.col("height") / chunk))
-            .join(F.broadcast(ids_df), F.col("_cid") == F.col("cid"), "left_semi")
-            .drop("_cid")
-        )
+        # P1: trim file overlap to the passing chunks (an IN-set on chunk id)
+        df = df.filter(F.floor(F.col("height") / chunk).isin(passing_ids))
         copied[kind] = df
         rewritten_ids[kind] = todo
         wr = ref_layout.write_range_files(
@@ -255,7 +111,12 @@ def compact(
             fmt=fmt,
             compression=compression,
         )
-        result.written.extend(r["location"] for r in wr.collect() if not r["skipped"])
+        writes = wr if writes is None else writes.unionByName(wr)
+    rows = writes.collect()  # a passing chunk lacks an exact file of some kind
+    for kind in rewritten_ids:
+        result.written.extend(
+            r["location"] for r in rows if r["type"] == kind and not r["skipped"]
+        )
 
     # phase C: J6/A7 reconciliation for ALL chunks in one grouped job
     bad_ids: set[int] = set()

@@ -1,27 +1,29 @@
 """``fix`` — detect and re-archive missing data (reference
 ``src/command/fix.rs:39-69``).
 
-Spark shape (SURVEY §3.3.4): the gap work list comes straight from
-``find_incomplete_tables`` (closed-form interval SQL over the inventory);
-all missing ranges of one kind are re-archived in ONE fetch+write job
-(``overwrite=False`` so racing writers keep existing files, S13), narrowed
-to only the missing kinds (``only_include``, P6). The reference loops gap by
-gap — fine for its in-process writes, but a fragmented archive (thousands of
-small gaps) would serialize thousands of ~100 ms Spark job launches; here
-the gap list is the partition domain of a single job per kind.
+Planning runs on the driver: the gap work list is
+``core.inventory_plan.missing_ranges`` over the parsed archive listing (a
+sort-and-sweep per kind, no Spark job), so a dry run launches no job at all.
+Spark runs only the repair: every missing range of every kind is re-fetched
+and written in ONE action (``overwrite=False`` so racing writers keep
+existing files, S13), narrowed to the missing kinds (``only_include``, P6).
+The reference loops gap by gap — fine for its in-process writes, but a
+fragmented archive (thousands of small gaps) would serialize thousands of
+~100 ms Spark job launches; here the gap list is the partition domain of the
+one write job.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from ..core.filenames import DataKind
+from ..core.inventory_plan import missing_ranges
 from ..core.ranges import Range, merge_ranges
-from ..operators.inventory import find_incomplete_tables
 from ..sources import ref_layout
-from ..sources.archive import inventory_df
+from ..sources.archive import list_inventory
 from ..sources.fetcher import FetchPolicy, fetch_blocks, fetch_table_for_heights
 from .archive_plan import ArchiveResult
 
@@ -46,18 +48,14 @@ def fix(
     fmt: str = "parquet",
     compression: str = "zstd",
 ) -> FixResult:
-    inv = inventory_df(spark, root, provider.blockchain_id)
-    kinds = tuple(k.value for k in tables)
-    missing = find_incomplete_tables(inv, rng.start, rng.end, kinds=kinds)
-    work = sorted(
-        ((r["kind"], r["start"], r["end"]) for r in missing.collect()),
-        key=lambda t: (t[1], t[0]),
-    )
+    files = list_inventory(root, provider.blockchain_id)
+    work = missing_ranges(files, rng, tuple(k.value for k in tables))
     results: list[ArchiveResult] = []
-    if not dry_run:
+    if work and not dry_run:
         by_kind: dict[str, list[Range]] = {}
         for kind, lo, hi in work:
             by_kind.setdefault(kind, []).append(Range(lo, hi))
+        writes: DataFrame | None = None
         for kind, ranges in by_kind.items():
             merged = merge_ranges(ranges)
             # file pieces: gaps cut at absolute chunk boundaries, so restored
@@ -79,7 +77,11 @@ def fix(
                 fmt=fmt,
                 compression=compression,
             )
-            rows = wr.collect()
+            writes = wr if writes is None else writes.unionByName(wr)
+        # one action writes every kind (as archive does); results split per kind
+        all_rows = writes.collect()
+        for kind in by_kind:
+            rows = [r for r in all_rows if r["type"] == kind]
             notif = ref_layout.notifications_df(
                 spark.createDataFrame(rows, ref_layout.WRITE_RESULT_SCHEMA)
             )

@@ -1,22 +1,26 @@
 """``verify`` — integrity audit with destructive repair (reference
 ``src/command/verify.rs:409-477`` lifecycle, SURVEY §3.3).
 
-Pipeline (every check is a DataFrame predicate; the only driver-side data is
-metadata-scale: group lists, delete lists, chain-head lookups):
+Steps 1-5 and the W4 grouping are planned on the driver from the parsed
+archive listing (``core.inventory_plan.plan_verify``, no Spark job); the
+only calls out are the live-chain hash lookups for forked heights. Spark
+runs the content check (step 6) and nothing else:
 
 1. inventory in scope (P2 range-intersection filter)
-2. duplicate same-kind files per (range, hash) → both deleted (J3 dup rule)
+2. duplicate same-kind files per (range, hash) → deleted (J3 dup rule)
 3. fork resolution for single-block groups: keep the hash matching the live
    chain, delete losers (J4)
 4. overlapping ranges → keep largest covering (W3)
 5. completeness: groups missing expected kinds → skipped (or deleted with
    ``fix_clean``) (A4)
-6. content verification per surviving group:
+6. content verification per surviving W4 island, the read data joined to a
+   broadcast path → island frame built from the plan:
    blocks — dup heights (A5), count==range (A6), parent-hash chain linkage
    (W1), payload non-empty/non-"null" (P5), head hash vs live chain (J5);
    txes/traces — txid set equality both directions vs the tx lists parsed
    out of the blocks' JSON (J1/J2), payload null checks
-7. failing groups → file delete list, honoring dry-run
+7. failing islands → every member group's files on the delete list,
+   honoring dry-run
 """
 
 from __future__ import annotations
@@ -28,9 +32,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..core.filenames import DataKind
+from ..core.inventory_plan import VerifyPlan, in_scope, plan_verify
 from ..core.ranges import Range
-from ..operators.inventory import group_ranges
-from ..sources.archive import delete_files, inventory_df
+from ..sources.archive import delete_files, list_inventory
 
 
 @dataclass
@@ -57,56 +61,51 @@ VERIFY_DRIVER_ROWS_ENV = "SPARK_GRAFT_VERIFY_MAX_DRIVER_ROWS"
 DEFAULT_VERIFY_DRIVER_ROWS = 100_000
 
 
-def _bounded_collect(df: DataFrame, what: str) -> list:
-    """Collect driver-side verify metadata under an ENFORCED ceiling.
-
-    The driver-state invariant (round-11 task): ``verify`` collects only
-    PER-CHUNK inventories — path lists, group keys, chunk-end scalars,
-    delete lists — whose size is set by chunking discipline (≤ ~1000
-    files per chunk at reference layout), never by data volume. Before
-    this guard the invariant was implicit: a caller handing verify an
-    unchunked fleet-scale scope would silently materialize a huge list on
-    the driver. Now every metadata collect routes here; the cap
-    (``$SPARK_GRAFT_VERIFY_MAX_DRIVER_ROWS``, default 100k — two orders
-    above any disciplined chunk) is pushed into the plan as a LIMIT, so
-    an absurd scope fails loudly after cap+1 rows instead of OOMing."""
+def _check_driver_rows(n: int, what: str) -> None:
+    """The driver-state ceiling (``$SPARK_GRAFT_VERIFY_MAX_DRIVER_ROWS``,
+    default 100k — two orders above any disciplined chunk). verify plans
+    on the driver from the in-scope files, and verify is meant to run per
+    chunk (≤ ~1000 files per chunk at reference layout): an unchunked
+    fleet-scale scope fails loudly here instead of building a huge plan
+    and delete list."""
     from ..core.env import env_int
 
     cap = env_int(VERIFY_DRIVER_ROWS_ENV, DEFAULT_VERIFY_DRIVER_ROWS)
-    rows = df.limit(cap + 1).collect()
-    if len(rows) > cap:
+    if n > cap:
         raise RuntimeError(
             f"verify driver inventory for {what} exceeds {cap} rows — verify "
             "is designed to run per-chunk; narrow the scope (--range-chunk) "
             f"or raise ${VERIFY_DRIVER_ROWS_ENV}"
         )
+
+
+def _bounded_collect(df: DataFrame, what: str) -> list:
+    """Collect under the driver-state ceiling; the cap is pushed into the
+    plan as a LIMIT, so an absurd scope fails after cap+1 rows."""
+    from ..core.env import env_int
+
+    rows = df.limit(env_int(VERIFY_DRIVER_ROWS_ENV, DEFAULT_VERIFY_DRIVER_ROWS) + 1).collect()
+    _check_driver_rows(len(rows), what)
     return rows
 
 
-def _read_kind(spark, base: str, inv: DataFrame, kind: str) -> DataFrame | None:
+def _read_kind(spark, base: str, plan: VerifyPlan, kind: str) -> DataFrame | None:
+    """The surviving files of ``kind``, each row tagged with its W4 island
+    as ``g_start``/``g_end``. Basenames are unique within a kind (they
+    encode range+hash), so the tag is a broadcast HASH join on the basename
+    against the plan's path → island map."""
     from ..sources.avro_io import read_archive_data
 
-    paths = [
-        r["path"]
-        for r in _bounded_collect(
-            inv.filter(F.col("kind") == kind).select("path"),
-            f"{kind} path list",
-        )
-    ]
+    paths = [f.path for f in plan.survivors if f.kind == kind]
     if not paths:
         return None
-    full = [os.path.join(base, p) for p in paths]
-    df = read_archive_data(spark, full, kind)
-    # attach the owning group's range via the inventory. Basenames are unique
-    # within a kind (they encode range+hash), so this is a broadcast HASH
-    # join on the basename — not a nested-loop LIKE scan.
-    inv_k = inv.filter(F.col("kind") == kind).select(
-        F.element_at(F.split(F.col("path"), "/"), -1).alias("_base"),
-        F.col("start").alias("g_start"),
-        F.col("end").alias("g_end"),
+    df = read_archive_data(spark, [os.path.join(base, p) for p in paths], kind)
+    tags = spark.createDataFrame(
+        [(p.rsplit("/", 1)[-1], *plan.path_island[p]) for p in paths],
+        "_base string, g_start long, g_end long",
     )
     df = df.withColumn("_base", F.element_at(F.split(F.col("_path"), "/"), -1))
-    return df.join(F.broadcast(inv_k), "_base", "left").drop("_base")
+    return df.join(F.broadcast(tags), "_base", "left").drop("_base")
 
 
 def verify_native(
@@ -212,149 +211,20 @@ def verify(
     report = VerifyReport(scope=rng, dry_run=dry_run)
     to_delete: set[str] = set()
 
-    inv_all = inventory_df(spark, root, blockchain)
-    # P2: files whose range intersects the scope. The fork-hash qualifier is
-    # normalized to '' so (start, end, hash) joins are null-safe.
-    inv = (
-        inv_all.filter((F.col("end") >= rng.start) & (F.col("start") <= rng.end))
-        .withColumn("hash", F.coalesce(F.col("hash"), F.lit("")))
-        .cache()
-    )
-
-    groups = group_ranges(inv, kinds=kinds).cache()
-    report.groups_total = groups.count()
-
-    # steps 2-5 build ONE lazy prune DAG — precedence (dup → fork → overlap →
-    # incomplete) via chained anti-joins, all materialized with two collects
-    # instead of a job per step (metadata-phase latency matters when verify
-    # runs per-chunk at fleet scale)
-    from ..operators.inventory import dedup_largest_covering
-
-    KEY = ["start", "end", "hash"]
-
-    def labeled(df: DataFrame, reason: str) -> DataFrame:
-        return df.select(*KEY).withColumn("reason", F.lit(reason))
-
-    # 2. duplicate same-kind files for one (range, hash) → delete every copy
-    dup_cond = None
-    for k in kinds:
-        c = F.col(f"n_{k}") > 1
-        dup_cond = c if dup_cond is None else (dup_cond | c)
-    dup_keys = labeled(groups.filter(dup_cond), "duplicate")
-    # duplicate groups delete ONLY the files of the kind(s) that are actually
-    # duplicated (reference RangeGroupError::Duplicate, verify.rs:434-457) —
-    # an innocent txes file survives when only the blocks kind is doubled
-    dup_kind_parts = [
-        groups.filter(F.col(f"n_{k}") > 1).select(*KEY).withColumn("kind", F.lit(k))
-        for k in kinds
-    ]
-    dup_kind_keys = dup_kind_parts[0]
-    for p in dup_kind_parts[1:]:
-        dup_kind_keys = dup_kind_keys.unionByName(p)
-    g_after_dup = groups.join(dup_keys.select(*KEY), KEY, "left_anti")
-
-    # 3. fork resolution (J4): single-height groups with >1 hash variant.
-    # The forked-height list must be driver-side (live-chain lookups) — this
-    # is the one unavoidable early job, and it's tiny.
-    singles = g_after_dup.filter(F.col("start") == F.col("end"))
-    forked_heights = (
-        singles.groupBy("start").agg(F.countDistinct("hash").alias("n")).filter("n > 1")
-    )
-    fork_list = [r["start"] for r in _bounded_collect(forked_heights, "forked heights")]
-    if fork_list:
-        lookup = spark.createDataFrame(
-            [(h, provider.block_hash(h)) for h in fork_list], "start long, live_hash string"
-        )
-        fork_losers = labeled(
-            singles.join(F.broadcast(lookup), "start").filter(
-                (F.col("hash") != "") & (F.col("hash") != F.col("live_hash"))
-            ),
-            "fork_loser",
-        )
-    else:
-        fork_losers = labeled(g_after_dup.limit(0), "fork_loser")
-    g_after_fork = g_after_dup.join(fork_losers.select(*KEY), KEY, "left_anti")
-
-    # 4. overlapping ranges → keep the largest covering (W3)
-    marked = dedup_largest_covering(g_after_fork)
-    overlap_losers = labeled(marked.filter(~F.col("keep")), "overlap_loser")
-    g_after_overlap = marked.filter(F.col("keep")).drop("keep")
-
-    # 5. completeness (A4)
-    inc_cond = None
-    for k in kinds:
-        c = F.col(f"n_{k}") == 0
-        inc_cond = c if inc_cond is None else (inc_cond | c)
-    inc_keys = labeled(g_after_overlap.filter(inc_cond), "incomplete")
-    groups = g_after_overlap.join(inc_keys.select(*KEY), KEY, "left_anti")
-
-    dup_files = (
-        inv.join(dup_kind_keys, [*KEY, "kind"], "inner")
-        .select("path", *KEY, F.lit("duplicate").alias("reason"))
-    )
-
-    pruned = fork_losers.unionByName(overlap_losers).unionByName(inc_keys)
-    pruned_files = inv.join(pruned, KEY, "inner").select("path", *KEY, "reason").unionByName(
-        dup_files
-    )
-    seen_groups: set = set()
+    files = in_scope(list_inventory(root, blockchain), rng)
+    _check_driver_rows(len(files), "in-scope files")
+    plan = plan_verify(files, kinds, provider.block_hash)
+    report.groups_total = plan.groups_total
+    report.failures.extend(plan.failures)
     failed_group_keys: set[tuple[int, int]] = set()
-    for r in _bounded_collect(pruned_files, "pruned-file list"):
-        destructive = r["reason"] != "incomplete" or fix_clean
-        if destructive:
-            to_delete.add(r["path"])
-        failed_group_keys.add((r["start"], r["end"]))
-        gk = (r["start"], r["end"], r["hash"], r["reason"])
-        if gk not in seen_groups:
-            seen_groups.add(gk)
-            report.failures.append(
-                {"start": r["start"], "end": r["end"], "reason": r["reason"]}
-            )
-
-    # hash participates in the key: a pruned fork twin at the same height must
-    # not leak its file into the surviving group's content check
-    surviving_inv = inv.join(
-        groups.select("start", "end", "hash"), ["start", "end", "hash"], "left_semi"
-    ).cache()
-
-    # W4 (verify.rs:237-267): adjacent groups of ≤10 blocks are verified as
-    # ONE island unit — the parent-hash chain check then spans file
-    # boundaries (a break between two 10-block files is invisible to
-    # per-group windows), and per-group job overhead collapses.
-    from ..operators.inventory import merge_small_ranges
-
-    memb = (
-        merge_small_ranges(groups.select("start", "end").distinct(), threshold=10)
-        .select("island_start", "island_end", F.explode("members").alias("m"))
-        .select(
-            "island_start",
-            "island_end",
-            F.col("m.start").alias("m_start"),
-            F.col("m.end").alias("m_end"),
-        )
-    )
-
-    def attach_islands(df: DataFrame | None) -> DataFrame | None:
-        if df is None:
-            return None
-        return (
-            df.join(
-                F.broadcast(memb),
-                (df["g_start"] == memb["m_start"]) & (df["g_end"] == memb["m_end"]),
-                "left",
-            )
-            .withColumn("g_start", F.coalesce("island_start", "g_start"))
-            .withColumn("g_end", F.coalesce("island_end", "g_end"))
-            .drop("island_start", "island_end", "m_start", "m_end")
-        )
+    for f in plan.pruned:
+        if f.reason != "incomplete" or fix_clean:
+            to_delete.add(f.path)
+        failed_group_keys.add((f.start, f.end))
 
     # 6. content verification
     bad_groups: DataFrame | None = None
-    bdf = (
-        attach_islands(_read_kind(spark, base, surviving_inv, "blocks"))
-        if "blocks" in kinds
-        else None
-    )
+    bdf = _read_kind(spark, base, plan, "blocks") if "blocks" in kinds else None
     expected = None
     if bdf is not None:
         # several aggregate branches (stats, expected txids, payload checks)
@@ -368,15 +238,9 @@ def verify(
             ).otherwise(0),
         )
         # J5 head-hash confirmation against the live chain
-        ends = [
-            r["g_end"]
-            for r in _bounded_collect(
-                bdf.select("g_end").distinct(), "group-end list"
-            )
-            if r["g_end"] is not None
-        ]
         head_lookup = spark.createDataFrame(
-            [(h, provider.block_hash(h)) for h in ends], "g_end long, live_hash string"
+            [(h, provider.block_hash(h)) for h in plan.island_ends],
+            "g_end long, live_hash string",
         )
         blocks_stat = (
             linked.groupBy("g_start", "g_end")
@@ -416,7 +280,7 @@ def verify(
         )
 
     def tx_check(kind: str, payload_cols: list[str]) -> DataFrame | None:
-        tdf = attach_islands(_read_kind(spark, base, surviving_inv, kind))
+        tdf = _read_kind(spark, base, plan, kind)
         if tdf is None or expected is None:
             return None
         # four aggregate branches below share this read — cache it
@@ -464,7 +328,7 @@ def verify(
 
     failing_keys: list[tuple[int, int]] = []
     if bad_groups is not None:
-        for r in _bounded_collect(bad_groups, "failing block groups"):
+        for r in bad_groups.collect():
             failing_keys.append((r["g_start"], r["g_end"]))
             report.failures.append(
                 {
@@ -478,7 +342,7 @@ def verify(
     if "transactions" in kinds:
         bad_tx = tx_check("transactions", ["json", "raw"])
         if bad_tx is not None:
-            for r in _bounded_collect(bad_tx, "failing tx groups"):
+            for r in bad_tx.collect():
                 failing_keys.append((r["g_start"], r["g_end"]))
                 report.failures.append(
                     {
@@ -492,25 +356,18 @@ def verify(
     if "traces" in kinds:
         bad_tr = tx_check("traces", ["traceJson", "stateDiffJson"])
         if bad_tr is not None:
-            for r in _bounded_collect(bad_tr, "failing trace groups"):
+            for r in bad_tr.collect():
                 failing_keys.append((r["g_start"], r["g_end"]))
                 report.failures.append(
                     {"start": r["g_start"], "end": r["g_end"], "reason": "traces_content"}
                 )
 
     # 7. failing islands → delete all their member groups' files
-    if failing_keys:
-        keys_df = spark.createDataFrame(sorted(set(failing_keys)), "i_start long, i_end long")
-        fail_members = memb.join(
-            keys_df,
-            (memb["island_start"] == F.col("i_start"))
-            & (memb["island_end"] == F.col("i_end")),
-            "left_semi",
-        ).select(F.col("m_start").alias("start"), F.col("m_end").alias("end"))
-        fail_files = surviving_inv.join(fail_members, ["start", "end"], "left_semi")
-        for r in _bounded_collect(fail_files, "failing-island file list"):
-            to_delete.add(r["path"])
-            failed_group_keys.add((r["start"], r["end"]))
+    failing = set(failing_keys)
+    for f in plan.survivors:
+        if plan.path_island[f.path] in failing:
+            to_delete.add(f.path)
+            failed_group_keys.add((f.start, f.end))
 
     report.groups_ok = report.groups_total - len(failed_group_keys)
     if snapshot and not dry_run:
@@ -543,8 +400,6 @@ def verify(
     else:
         res = delete_files(base, sorted(to_delete), dry_run=dry_run)
         report.deleted = res.deleted
-    inv.unpersist()
-    surviving_inv.unpersist()
     if bdf is not None:
         bdf.unpersist()
     if expected is not None:

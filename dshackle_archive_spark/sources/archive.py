@@ -3,9 +3,9 @@
 Reference behaviors covered (S1-S5, S11-S14 in SURVEY §2.1):
 
 - file scan     -> ``spark.read`` with the fixed table schema
-- listing scan  -> file-inventory DataFrame parsed from paths (local FS walk
-                   here; on a cluster the same rows come from an S3 listing or
-                   ``input_file_name()`` over a glob read)
+- listing scan  -> file inventory parsed from paths (``list_inventory``; local
+                   FS walk or a pyarrow URI listing; ``inventory_df`` as a
+                   DataFrame, ``inventory_df_hadoop`` parsed JVM-side)
 - sinks         -> ``df.write`` with Spark's commit protocol supplying the
                    reference's delete-on-drop atomicity (``fs.rs:204-219``)
 - delete        -> inventory-driven file removal with dry-run, mirroring
@@ -26,7 +26,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..core.filenames import LEVEL1, LEVEL2, parse_filename
+from ..core.filenames import LEVEL1, LEVEL2
+from ..core.inventory_plan import InvFile, parse_listing
 from ..core.ranges import Range
 from ..schemas import INVENTORY_SCHEMA
 
@@ -244,8 +245,9 @@ def list_archive_files_pyarrow(root: str) -> list[str]:
     return sorted(out)
 
 
-def inventory_df(spark: SparkSession, root: str, blockchain: str | None = None) -> DataFrame:
-    """File-inventory DataFrame: parse (kind, start, end, hash) from paths.
+def list_inventory(root: str, blockchain: str | None = None) -> list[InvFile]:
+    """The parsed archive listing: one ``InvFile(path, kind, start, end,
+    hash)`` per archive file, paths relative to the chain dir.
 
     Non-matching (foreign) files are skipped, as in ``filenames.rs:29-49``.
     URI roots (``s3://…``) list through pyarrow; posix roots walk locally.
@@ -258,12 +260,15 @@ def inventory_df(spark: SparkSession, root: str, blockchain: str | None = None) 
     else:
         base = os.path.join(root, blockchain.lower()) if blockchain else root
         listed = list_archive_files(base) if os.path.isdir(base) else []
-    rows = []
-    for rel in listed:
-        fi = parse_filename(rel)
-        if fi is not None:
-            rows.append((rel, fi.kind.value, fi.range.start, fi.range.end, fi.hash))
-    return spark.createDataFrame(rows, INVENTORY_SCHEMA)
+    return parse_listing(listed)
+
+
+def inventory_df(spark: SparkSession, root: str, blockchain: str | None = None) -> DataFrame:
+    """File-inventory DataFrame of ``list_inventory``: (path, kind, start,
+    end, hash) rows."""
+    return spark.createDataFrame(
+        [tuple(f) for f in list_inventory(root, blockchain)], INVENTORY_SCHEMA
+    )
 
 
 def delete_files(root: str, rel_paths: list[str], dry_run: bool = False) -> DeleteResult:

@@ -443,6 +443,34 @@ def test_fix_batches_gaps_into_one_job_per_kind(spark, tmp_path):
     assert rep.failures == []
 
 
+def test_dry_run_fix_and_compact_launch_no_spark_job(spark, tmp_path):
+    """Planning runs on the driver over the parsed listing: a dry-run fix
+    (gap work list) and a dry-run compact (chunk gate) launch 0 Spark
+    jobs and touch no file."""
+    archive_single_blocks(spark, CHAIN, str(tmp_path), Range(0, 199), tables=BT, policy=POLICY)
+    delete_files(str(tmp_path / "eth"), ["000000000/000000000/000000005.txes.parquet"])
+    before = tree(tmp_path)
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, "count dry-run jobs")
+        try:
+            res = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return res, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    fres, fix_jobs = jobs("fix-dry", lambda: fix(
+        spark, CHAIN, str(tmp_path), Range(0, 199), tables=BT, dry_run=True))
+    cres, compact_jobs = jobs("compact-dry", lambda: compact(
+        spark, str(tmp_path), "ETH", Range(0, 199), tables=BT, chunk=100, dry_run=True))
+    assert fres.missing == [("transactions", 5, 5)] and fres.archived == []
+    assert cres.skipped_chunks == [(0, 99, "transactions does not exactly cover the chunk")]
+    assert cres.compacted_chunks == [] and cres.written == [] and cres.deleted == []
+    assert (fix_jobs, compact_jobs) == (0, 0)
+    assert tree(tmp_path) == before
+
+
 def test_verify_merges_small_ranges_into_islands(spark, tmp_path):
     """W4 (verify.rs:237-267): adjacent ≤10-block groups are content-checked
     as one island — a parent-hash break BETWEEN two 10-block files is

@@ -43,6 +43,26 @@ def test_subtract_matches_set_semantics(base, cuts):
         assert a.end + 1 < b.start
 
 
+# the fix planner's shape: a few requested ranges minus many short files,
+# cuts straddling base edges and spanning several bases
+many_cuts_st = st.lists(
+    st.tuples(st.integers(0, 400), st.integers(0, 5)).map(
+        lambda t: Range(t[0], t[0] + t[1])
+    ),
+    max_size=80,
+)
+
+
+@given(ranges_st, many_cuts_st)
+@settings(max_examples=300, deadline=None)
+def test_subtract_sweep_matches_height_set_difference(base, cuts):
+    result = subtract_ranges(base, cuts)
+    assert as_set(result) == as_set(base) - as_set(cuts)
+    assert result == sorted(result)
+    for a, b in zip(result, result[1:]):
+        assert a.end + 1 < b.start
+
+
 @given(ranges_st, st.integers(1, 97))
 @settings(max_examples=100, deadline=None)
 def test_chunk_split_partitions_exactly(rs, chunk):
